@@ -34,6 +34,16 @@ def trunc_log(x: np.ndarray) -> np.ndarray:
 class Family:
     name = "base"
     n_targets_from_classes = staticmethod(lambda c: 1)
+    # c in the FISTA step 1/L with L = eigmax(X'X) / c (gaussian 1,
+    # binomial 4, multinomial 2); None: no global Lipschitz bound, so the
+    # solver keeps its backtracking line search (poisson)
+    lipschitz_factor: float | None = None
+
+    def lipschitz_step(self, eig_bound: float) -> float | None:
+        """Fixed FISTA step from an upper bound on eigmax(X'X); None when
+        the family has no global Lipschitz bound or the bound is 0."""
+        ok = self.lipschitz_factor is not None and eig_bound > 0
+        return self.lipschitz_factor / eig_bound if ok else None
 
     def primal(self, y: np.ndarray, lin_pred: np.ndarray) -> float:
         raise NotImplementedError
@@ -66,6 +76,7 @@ class Gaussian(Family):
     """``src/families/gaussian.h:21-45``."""
 
     name = "gaussian"
+    lipschitz_factor = 1.0
 
     def primal(self, y, lin_pred):
         r = y - lin_pred
@@ -92,6 +103,7 @@ class Binomial(Family):
     """``src/families/binomial.h:15-44``; y in {-1, +1}."""
 
     name = "binomial"
+    lipschitz_factor = 4.0
 
     def primal(self, y, lin_pred):
         return float(np.sum(trunc_log(1.0 + trunc_exp(-y * lin_pred))))
@@ -161,6 +173,7 @@ class Multinomial(Family):
     handled by the ``exp(-lp_max)`` term in the log-sum-exp."""
 
     name = "multinomial"
+    lipschitz_factor = 2.0
 
     @staticmethod
     def _lse(lin_pred: np.ndarray) -> np.ndarray:

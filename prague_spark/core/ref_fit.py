@@ -1,8 +1,8 @@
 """Driver-only NumPy reference path fit.
 
 Replicates ``prague_spark.fit.fit`` semantics (response preprocessing,
-l2 standardization, intercept preconditioning, lambda/sigma machinery,
-warm-started path with early stopping, rescale — the lifecycle of
+l2 standardization, intercept preconditioning, the shared path loop of
+``core.path`` without screening, rescale — the lifecycle of
 ``src/owl.cpp:40-395`` in jolars/prague) on in-memory arrays with NO
 SparkSession. Used to PIN deterministic coefficient literals for the
 KKT-residual oracle queries: the same constants are embedded in both the
@@ -15,33 +15,7 @@ from __future__ import annotations
 import numpy as np
 
 from .families import setup_family
-from .lambdas import lambda_sequence, sigma_grid
-
-
-def preprocess_response_np(y_raw, family: str):
-    """NumPy mirror of ops.response.preprocess_response. Returns
-    (Y (n, m), y_center, y_scale, class_names)."""
-    if family == "gaussian":
-        y = np.asarray(y_raw, dtype=np.float64)
-        c = float(y.mean())
-        s = float(y.std(ddof=1))
-        s = s if s > 0 else 1.0
-        return ((y - c) / s)[:, np.newaxis], np.array([c]), np.array([s]), []
-    if family == "binomial":
-        ys = np.asarray(y_raw).astype(str)
-        classes = sorted(set(ys))
-        enc = np.where(ys == classes[0], -1.0, 1.0)
-        return enc[:, np.newaxis], np.array([0.0]), np.array([1.0]), classes
-    if family == "multinomial":
-        ys = np.asarray(y_raw).astype(str)
-        classes = sorted(set(ys))
-        m = len(classes) - 1
-        Y = np.stack([(ys == c).astype(np.float64) for c in classes[:m]], axis=1)
-        return Y, np.zeros(m), np.ones(m), classes
-    if family == "poisson":
-        y = np.asarray(y_raw, dtype=np.float64)
-        return y[:, np.newaxis], np.array([0.0]), np.array([1.0]), []
-    raise ValueError(family)
+from .path import run_path
 
 
 def numpy_path_fit(
@@ -71,12 +45,13 @@ def numpy_path_fit(
     """
     from ..design import LocalDesign
     from ..fit import _lambda_max_from_stats, _rescale
+    from ..ops.response import preprocess_response_local
     from .solver import fista
 
     fam = setup_family(family)
     X_raw = np.asarray(X_raw, dtype=np.float64)
     n, p = X_raw.shape
-    Y, y_center, y_scale, class_names = preprocess_response_np(y_raw, family)
+    rinfo, Y = preprocess_response_local(y_raw, family)
     m = Y.shape[1]
 
     x_center = X_raw.mean(axis=0) if center else np.zeros(p)
@@ -89,55 +64,36 @@ def numpy_path_fit(
     X = np.hstack([np.full((n, 1), icol), Xs])
     design = LocalDesign(X, Y, fam)
 
-    lambda_max = _lambda_max_from_stats(
-        family, X.T @ Y, X.sum(axis=0), Y.sum(axis=0), n, intercept=True
-    )
-    lam = lambda_sequence(p * m, n, lambda_type, q)
-    sigma_is_auto = sigma is None
-    if sigma_is_auto:
-        sig, sigma_max = sigma_grid(lambda_max, lam, n_sigma, lambda_min_ratio, n=n, p=p)
-    else:
-        sig = np.atleast_1d(np.asarray(sigma, dtype=np.float64))
-
-    null_dev = 2.0 * design.primal(np.zeros((p + 1, m)))
-    betas = np.zeros((len(sig), p + 1, m))
-    beta = np.zeros((p + 1, m))
-    deviances: list[float] = []
-    k = 0
-    while k < len(sig):
-        res = fista(
-            design, beta, lam * sig[k], n_unpenalized=1,
+    def solve(idx, beta_init, lam_s):
+        return fista(
+            design, beta_init, lam_s, n_unpenalized=1,
             max_passes=max_passes, tol_rel_gap=tol_rel_gap, tol_infeas=tol_infeas,
         )
-        beta = res.beta.reshape(p + 1, m)
-        betas[k] = beta
-        deviances.append(res.deviance)
-        dev_ratio = 1.0 - res.deviance / null_dev
-        if k > 0 and sigma_is_auto and np.any(beta != 0):
-            prev = deviances[k - 1]
-            change = abs((prev - res.deviance) / prev) if prev != 0 else 0.0
-            if change < tol_dev_change or dev_ratio > tol_dev_ratio:
-                k += 1
-                break
-        k += 1
 
-    betas = betas[:k]
-    sig = sig[:k]
-    out = betas.copy()
-    out[:, 0, :] *= icol  # undo the intercept preconditioning
-    out = _rescale(out, x_center, x_scale, y_center, y_scale, intercept=True)
+    path = run_path(
+        solve, None,
+        lambda_max=_lambda_max_from_stats(
+            family, X.T @ Y, X.sum(axis=0), Y.sum(axis=0), n, intercept=True
+        ),
+        null_deviance=2.0 * design.primal(np.zeros((p + 1, m))),
+        n=n, p=p + 1, m=m, lambda_type=lambda_type, q=q, n_sigma=n_sigma,
+        sigma=sigma, lambda_min_ratio=lambda_min_ratio, tol_infeas=tol_infeas,
+        tol_dev_change=tol_dev_change, tol_dev_ratio=tol_dev_ratio,
+    )
+    out = _rescale(path.betas, x_center, x_scale, rinfo.y_center,
+                   rinfo.y_scale, intercept=True, icol=icol)
     n_nonzero = [int(np.count_nonzero(np.any(b[1:] != 0, axis=1))) for b in out]
     return dict(
         betas=out,
-        sigma=sig,
-        lam=lam,
+        sigma=path.sigma,
+        lam=path.lam,
         n=n,
         m=m,
         x_center=x_center,
         x_scale=x_scale,
-        y_center=y_center,
-        y_scale=y_scale,
-        class_names=class_names,
+        y_center=rinfo.y_center,
+        y_scale=rinfo.y_scale,
+        class_names=rinfo.class_names,
         n_nonzero=n_nonzero,
         tol_infeas=tol_infeas,
     )

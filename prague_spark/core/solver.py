@@ -30,6 +30,13 @@ from .screening import infeasibility
 
 _EPS = np.finfo(np.float64).eps
 
+# Hessian payload guard: prox-Newton ships 2 + p_act*m + (p_act*m)^2
+# doubles per partition partial; past ~10^6 cells (p_act*m ~ 1000) the
+# quadratic payload, not the scan count, becomes the cluster cost, so the
+# distributed routes fall back to FISTA with a trace-bound fixed step,
+# which ships only O(p_act*m) per partial.
+HESS_CELL_GUARD = 10**6
+
 
 @dataclass
 class FitResult:
@@ -271,15 +278,13 @@ def prox_newton(
         bvec = beta.ravel(order="F")
         c = H @ bvec - grad.ravel(order="F")
         gd = GramData(gram=H[np.ix_(perm, perm)], xty=c[perm], yty=0.0, n=getattr(design, "n", 1))
-        w_eig, _ = gd.eigh()
-        eig_max = max(float(w_eig.max()), small)
-        rho = admm_rho(eig_max, float(lam.max()) if lam.size else 1.0)
         # the inner solve must be TIGHTER than the outer duality-gap stop:
         # its residual is the floor under the achievable gap (driver-side
         # iterations are cheap; data passes are not)
-        res, _, _ = admm_gaussian(
-            gd, bvec[perm], bvec[perm].copy(), np.zeros(pm), lam, rho,
-            max_passes=10**5, tol_abs=tol_abs * 1e-3, tol_rel=tol_rel * 1e-3,
+        res = admm_warm_start(
+            gd, bvec[perm], lam, bvec[perm].copy(), np.zeros(pm),
+            eig_floor=small, max_passes=10**5,
+            tol_abs=tol_abs * 1e-3, tol_rel=tol_rel * 1e-3,
         )
         beta_new = res.beta.ravel()[inv_perm].reshape((p, m), order="F")
 
@@ -486,3 +491,20 @@ def admm_gaussian(
 def admm_rho(gram_max_eig: float, lam_max_sigma: float) -> float:
     """rho heuristic: eigmax^(1/3) * (max penalty)^(2/3) (``src/owl.cpp:188-190``)."""
     return float(gram_max_eig ** (1.0 / 3.0) * lam_max_sigma ** (2.0 / 3.0))
+
+
+def admm_warm_start(gram, beta0, lam, z, u, idx=None, *, eig_floor=None,
+                    **kwargs) -> FitResult:
+    """One warm-started ADMM solve: rho from the Gram's top eigenvalue
+    (floored at ``eig_floor`` when given) and the largest penalty, then
+    ``admm_gaussian`` from the path's ``z``/``u`` state over the columns
+    ``idx`` (all when None), which is written back in place."""
+    eig_max = float(gram.eigh()[0].max())
+    if eig_floor is not None:
+        eig_max = max(eig_max, eig_floor)
+    rho = admm_rho(eig_max, float(lam.max()) if lam.size else 1.0)
+    sel = slice(None) if idx is None else idx
+    res, z[sel], u[sel] = admm_gaussian(
+        gram, beta0, z[sel], u[sel], lam, rho, **kwargs
+    )
+    return res

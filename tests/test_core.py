@@ -167,6 +167,36 @@ def test_kkt_check_flags_violations():
     assert 0 not in out2
 
 
+def test_repair_adds_unflagged_zero_columns_ranked_before_a_violation():
+    from prague_spark.core.path import repair_candidates
+
+    lam = np.array([1.0, 0.9, 0.8])
+    beta = np.array([[0.0], [0.0], [0.3]])
+    working, strong = np.array([1, 2]), np.array([1, 2])
+    # sorted |g|: col 0 (outside the working set) keeps the prefix sum
+    # under the tolerance at its own position; col 1 (inside) then pushes
+    # it over, so kkt_check flags only col 1 and the reference rule alone
+    # would accept the point
+    g = np.array([0.99, 0.97, 0.5])[:, None]
+    assert kkt_check(g, beta, lam, tol=1e-3, intercept=False).tolist() == [1]
+    out = repair_candidates(g, beta, lam, 1e-3, False, strong, working)
+    assert out.tolist() == [0]
+    # the same layout behind an unpenalized intercept row
+    g_i = np.vstack([[0.0], g])
+    b_i = np.vstack([[0.5], beta])
+    out_i = repair_candidates(g_i, b_i, lam, 1e-3, True, strong + 1,
+                              np.concatenate([[0], working + 1]))
+    assert out_i.tolist() == [1]
+    # a flag outside the working set is returned as the reference finds it
+    g2 = np.array([1.5, 0.1, 0.5])[:, None]
+    assert repair_candidates(g2, beta, lam, 1e-3, False, strong,
+                             working).tolist() == [0]
+    # a feasible gradient needs no repair
+    g3 = np.array([0.5, 0.4, 0.3])[:, None]
+    assert repair_candidates(g3, beta, lam, 1e-3, False, strong,
+                             working).size == 0
+
+
 def test_infeasibility():
     lam = np.array([1.0, 0.5])
     assert infeasibility(np.array([0.5, 0.1]), lam) == 0.0

@@ -282,7 +282,7 @@ def test_sparse_pair_volume_guard_falls_back_to_fista(spark, monkeypatch):
     # eval_hessian's triplet self-join ships sum_i nnz_i^2 rows per
     # prox-Newton outer iteration; a design with a few dense rows must
     # route to the trace-bound FISTA fallback even when p itself is small
-    # (the hess_cell_guard would never trigger). prox_newton is poisoned
+    # (the HESS_CELL_GUARD would never trigger). prox_newton is poisoned
     # to prove the fallback is the path taken.
     import sys
 
@@ -477,33 +477,11 @@ def test_sparse_hessian_prox_newton_matches_dense_incore(spark, family):
 
 def test_sparse_gram_pair_expansion_matches_dense_incore(spark):
     """The r14 gaussian analogue of the r13 sparse Hessian: the in-core
-    gaussian subset ADMM needs only Gram sufficient statistics, and
-    SparseLocalDesign.gram() builds them from the cached pair expansion
-    — values must equal the dense GramData.from_xy product to float
-    rounding, and the wide gaussian fit routed through it must agree
-    with the distributed route to solver tolerance."""
-    import numpy as np
-
-    from prague_spark.core.families import setup_family
-    from prague_spark.design import LocalDesign, SparseLocalDesign
-
-    rng = np.random.default_rng(29)
-    n, p = 300, 40
-    X = np.where(rng.random((n, p)) < 0.1, rng.normal(size=(n, p)), 0.0)
-    icol = 1.0 / np.sqrt(n)
-    Xf = np.hstack([np.full((n, 1), icol), X])
-    y = X[:, 0] * 2.0 + rng.normal(scale=0.5, size=n)
-    fam = setup_family("gaussian")
-    rows, cols = np.nonzero(X)
-    sld = SparseLocalDesign(rows, cols + 1, X[rows, cols], n, p + 1, y,
-                            fam, icol=icol)
-    gd_s = sld.gram()
-    gd_d = LocalDesign(Xf, y, fam).gram()
-    np.testing.assert_allclose(gd_s.gram, gd_d.gram, atol=1e-10)
-    np.testing.assert_allclose(gd_s.xty, gd_d.xty, atol=1e-10)
-    assert abs(gd_s.yty - gd_d.yty) < 1e-8
-    assert gd_s.n == gd_d.n
-
+    gaussian subset ADMM needs only Gram sufficient statistics, built by
+    SparseLocalDesign.gram() from the cached pair expansion (its values
+    are pinned against the dense product in the fast tier,
+    test_path_parity), and the wide gaussian fit routed through it must
+    agree with the distributed route to solver tolerance."""
     # end to end: the route fires on a wide sparse gaussian fit
     # (incore_sparse solves replace incore_dense; dense-route and
     # distributed-route betas agree to solver tolerance)
